@@ -82,6 +82,13 @@ object Tables {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  /** Content signature of the documents table — the currency key of the
+    * committed indexes built over it. Text length rides next to the doc
+    * id, so a doc-id-preserving regeneration of the corpus (which a
+    * count+id-sum signature is blind to) changes it too. */
+  val DocumentsContentSig: String =
+    "sum(cast(length(text) as bigint) + 31L * doc_id) + 1000003L * count(*)"
+
   val embeddingsSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),

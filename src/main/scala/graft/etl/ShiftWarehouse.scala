@@ -1,6 +1,7 @@
 package graft.etl
 
 import java.nio.file.{Files, Path, Paths}
+import graft.core.CommitProtocol.deleteRecursively
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -577,10 +578,4 @@ object ShiftWarehouse {
     "breaks" -> "break_id",
     "allowances" -> "allowance_id",
     "award_interpretations" -> "award_id")
-
-  /** Forwarded to the shared publish protocol's implementation — the
-    * warehouse's original copy moved to [[graft.core.CommitProtocol]]
-    * when the three publish paths were unified (review r8). */
-  private[graft] def deleteRecursively(p: Path): Unit =
-    graft.core.CommitProtocol.deleteRecursively(p)
 }

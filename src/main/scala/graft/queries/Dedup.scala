@@ -1386,61 +1386,38 @@ object Dedup {
     // the memoized token keys the BUILD side effect to the Staging
     // lifecycle: invalidate(sfDir) forces a rebuild with the frames
     graft.operators.Staging.memoized(spark, sfDir, "dedup-index-built") {
-      // committed-state fast path (the learnedCentroids staleness
-      // discipline): a fresh JVM over the same corpus bytes reuses the
-      // committed index instead of rebuilding it — the signature file
-      // detects an in-place corpus rewrite, and any partial state
-      // (missing markers) rebuilds from scratch. CONTENT-sensitive
-      // signature (review r15, advisor): text length rides next to the
-      // doc id, so a doc-id-preserving regeneration of the corpus (the
-      // fixture-refresh case a count+id-sum signature is blind to)
-      // invalidates the committed index like every other rewrite.
-      val sig = Tables.documents(spark, sfDir)
-        .agg(expr(
-          "sum(cast(length(text) as bigint) + 31L * doc_id) + 1000003L * count(*)"))
-        .head().getLong(0)
-      val sigFile = root.resolve("_GRAFT_SIG")
-      val current =
-        DedupIndex.isCommitted(root) &&
-        DedupIndex.committedDeltaCount(root) == 2 &&
-        java.nio.file.Files.exists(sigFile) &&
-        java.nio.file.Files.readString(sigFile).trim == sig.toString
-      if (current) Seq(root.toString).toDF("root")
-      else buildMaintainedIndex(spark, sfDir, root, sig)
+      // committed-state fast path: a fresh JVM over the same corpus
+      // bytes reuses the committed index instead of rebuilding it — the
+      // content signature detects an in-place corpus rewrite, and any
+      // partial state (missing markers or signature) rebuilds from scratch
+      val sig = graft.core.CommittedStore.signature(
+        Tables.documents(spark, sfDir), Tables.DocumentsContentSig)
+      graft.core.CommittedStore.gatedBuild(root, sig, deltas = 2,
+          layoutCurrent = true) {
+        val standingMembers = graft.queries.TextOps.qualityDecimal(spark, sfDir)
+          .join(standingLabels(spark, sfDir)
+              .select($"v".as("doc_id"), $"lbl".as("cluster_id")),
+            Seq("doc_id"))
+          .select($"doc_id", $"cluster_id", $"qd")
+        DedupIndex.writeBase(spark, root, standingMembers)
+        val isArr = (c: org.apache.spark.sql.Column) =>
+          c % KeepArriveMod === KeepArriveRem
+        val batchPairs = nearDupPairs(spark, sfDir)
+          .filter(isArr($"doc_a") || isArr($"doc_b"))
+          .select($"doc_a", $"doc_b")
+        val qd = graft.queries.TextOps.qualityDecimal(spark, sfDir)
+          .select($"doc_id", $"qd")
+        DedupIndex.applyMaintenance(spark, root, batchPairs, qd,
+          deletes = spark.emptyDataset[Long].toDF("doc_id"))
+        val tombs = DedupIndex.labels(spark, root)
+          .filter($"doc_id" % KeepDeleteMod === KeepDeleteRem)
+          .select($"doc_id")
+        DedupIndex.applyMaintenance(spark, root,
+          spark.emptyDataset[(Long, Long)].toDF("doc_a", "doc_b"), qd, tombs)
+      }
+      Seq(root.toString).toDF("root")
     }.count()
     root
-  }
-
-  private def buildMaintainedIndex(spark: SparkSession, sfDir: String,
-      root: java.nio.file.Path, sig: Long): DataFrame = {
-    import spark.implicits._
-    java.nio.file.Files.deleteIfExists(root.resolve("_GRAFT_SIG"))
-    locally {
-      val standingMembers = graft.queries.TextOps.qualityDecimal(spark, sfDir)
-        .join(standingLabels(spark, sfDir)
-            .select($"v".as("doc_id"), $"lbl".as("cluster_id")),
-          Seq("doc_id"))
-        .select($"doc_id", $"cluster_id", $"qd")
-      DedupIndex.writeBase(spark, root, standingMembers)
-      val isArr = (c: org.apache.spark.sql.Column) =>
-        c % KeepArriveMod === KeepArriveRem
-      val batchPairs = nearDupPairs(spark, sfDir)
-        .filter(isArr($"doc_a") || isArr($"doc_b"))
-        .select($"doc_a", $"doc_b")
-      val qd = graft.queries.TextOps.qualityDecimal(spark, sfDir)
-        .select($"doc_id", $"qd")
-      DedupIndex.applyMaintenance(spark, root, batchPairs, qd,
-        deletes = spark.emptyDataset[Long].toDF("doc_id"))
-      val tombs = DedupIndex.labels(spark, root)
-        .filter($"doc_id" % KeepDeleteMod === KeepDeleteRem)
-        .select($"doc_id")
-      DedupIndex.applyMaintenance(spark, root,
-        spark.emptyDataset[(Long, Long)].toDF("doc_a", "doc_b"), qd, tombs)
-    }
-    // sig LAST: a crash mid-build leaves no sig, so the next session
-    // rebuilds rather than trusting partial state
-    java.nio.file.Files.writeString(root.resolve("_GRAFT_SIG"), sig.toString)
-    Seq(root.toString).toDF("root")
   }
 
   /** Bench setup hook: build (and commit) the maintained index once so

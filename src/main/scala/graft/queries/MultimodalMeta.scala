@@ -707,18 +707,10 @@ object MultimodalMeta {
     graft.operators.Staging.memoized(spark, sfDir, "phash-index-built") {
       // content-sensitive corpus signature (the postingsIndexRoot
       // discipline): a doc-id-preserving rewrite invalidates
-      val sig = Tables.documents(spark, sfDir)
-        .agg(expr(
-          "sum(cast(length(text) as bigint) + 31L * doc_id) + 1000003L * count(*)"))
-        .head().getLong(0)
-      val sigFile = root.resolve("_GRAFT_SIG")
-      val current =
-        PhashIndex.isCommitted(root) &&
-        PhashIndex.committedDeltaCount(root) == 2 &&
-        java.nio.file.Files.exists(sigFile) &&
-        java.nio.file.Files.readString(sigFile).trim == sig.toString
-      if (!current) {
-        java.nio.file.Files.deleteIfExists(sigFile)
+      val sig = graft.core.CommittedStore.signature(
+        Tables.documents(spark, sfDir), Tables.DocumentsContentSig)
+      graft.core.CommittedStore.gatedBuild(root, sig, deltas = 2,
+          layoutCurrent = true) {
         val ph = phash60(spark, sfDir)
         val fr = frameHashRows(Tables.documents(spark, sfDir)
             .select($"doc_id".as("asset_id"), $"text"))
@@ -737,8 +729,6 @@ object MultimodalMeta {
           phashAdds = spark.emptyDataset[(Long, Long)].toDF("asset_id", "h"),
           frameAdds = spark.emptyDataset[(Long, String)].toDF("asset_id", "fh"),
           tombs = tombs)
-        // sig LAST: a crash mid-build leaves no sig → next session rebuilds
-        java.nio.file.Files.writeString(sigFile, sig.toString)
       }
       Seq(root.toString).toDF("root")
     }.count()

@@ -876,20 +876,13 @@ object Retrieval {
     val root = graft.core.Scratch.dir("postings-index", sfDir)
     graft.operators.Staging.memoized(spark, sfDir, "postings-index-built") {
       // content-sensitive corpus signature (the Dedup.maintainedIndexRoot
-      // discipline, review r15): a doc-id-preserving rewrite invalidates
-      val sig = graft.core.Tables.documents(spark, sfDir)
-        .agg(expr(
-          "sum(cast(length(text) as bigint) + 31L * doc_id) + 1000003L * count(*)"))
-        .head().getLong(0)
-      val sigFile = root.resolve("_GRAFT_SIG")
-      val current =
-        PostingsIndex.isCommitted(root) &&
-        PostingsIndex.committedDeltaCount(root) == 2 &&
-        PostingsIndex.isBucketed(root) &&
-        java.nio.file.Files.exists(sigFile) &&
-        java.nio.file.Files.readString(sigFile).trim == sig.toString
-      if (!current) {
-        java.nio.file.Files.deleteIfExists(sigFile)
+      // discipline); the content signature cannot see a LAYOUT change,
+      // so a pre-bucketing store rebuilds too
+      val sig = graft.core.CommittedStore.signature(
+        graft.core.Tables.documents(spark, sfDir),
+        graft.core.Tables.DocumentsContentSig)
+      graft.core.CommittedStore.gatedBuild(root, sig, deltas = 2,
+          layoutCurrent = PostingsIndex.isBucketed(root)) {
         val post = postings(spark, sfDir)
           .select($"term", $"doc_id", $"dl", $"tf")
         PostingsIndex.writeBase(spark, root,
@@ -904,8 +897,6 @@ object Retrieval {
           adds = spark.emptyDataset[(String, Long, Long, Long)]
             .toDF("term", "doc_id", "dl", "tf"),
           tombs = tombs)
-        // sig LAST: a crash mid-build leaves no sig → next session rebuilds
-        java.nio.file.Files.writeString(sigFile, sig.toString)
       }
       Seq(root.toString).toDF("root")
     }.count()

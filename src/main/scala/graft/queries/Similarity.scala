@@ -529,7 +529,7 @@ object Similarity {
   /** Build-or-reuse the committed centroid mirror, VERIFIED against the
     * current corpus signature once per (session, corpus) via the
     * Staging memo: a corpus rewritten in place changes its sig, so a
-    * stale mirror (valid marker, old model) is detected and rebuilt
+    * stale mirror (valid marker, old model — or no rows) is rebuilt
     * instead of silently serving centroids learned from bytes that no
     * longer exist (review r8 — the staged frames already had this
     * invalidation contract; the on-disk model needed it too).
@@ -538,36 +538,15 @@ object Similarity {
   private[queries] def learnedCentroids(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Staging.memoized(spark, sfDir, "centroids-learned") {
       import spark.implicits._
-      val path = learnedCentroidsPath(sfDir)
-      val sig = Tables.embeddings(spark, sfDir)
-        .agg(expr(CorpusSigSpark)).head().getLong(0)
-      this.synchronized {
-        val current = java.nio.file.Files.exists(path.resolve("_GRAFT_COMMITTED")) &&
-          spark.read.parquet(path.toString)
-            .select($"corpus_sig").head().getLong(0) == sig
-        if (!current) {
-          // staged OUTSIDE ann-centroids/ so the oracle's read_parquet
-          // glob can never observe half-written (or crash-residue)
-          // model files, then published through the shared protocol
-          // (which clears the stale mirror as destination residue)
-          java.nio.file.Files.deleteIfExists(path.resolve("_GRAFT_COMMITTED"))
-          val staging = path.getParent
-            .resolveSibling("ann-centroids-staging").resolve(path.getFileName)
-          graft.core.CommitProtocol.deleteRecursively(staging)
-          graft.operators.KMeans.fit(
-              graft.operators.KMeans.prep(
-                Tables.embeddings(spark, sfDir), "embedding", "vec_id"),
-              k = LearnedK, iters = LearnedIters)
-            .withColumn("corpus_sig", lit(sig))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(staging.toString)
-          graft.core.CommitProtocol.publish(staging, Seq(staging -> path)) {
-            java.nio.file.Files.createFile(path.resolve("_GRAFT_COMMITTED")); ()
-          }
-        }
-      }
-      spark.read.parquet(path.toString)
-        .select($"cluster_id".as("cid"), $"cv")
+      val sig = graft.core.CommittedStore.signature(
+        Tables.embeddings(spark, sfDir), CorpusSigSpark)
+      graft.core.CommittedStore.publishArtifact(spark,
+          learnedCentroidsPath(sfDir), sig) {
+        graft.operators.KMeans.fit(
+          graft.operators.KMeans.prep(
+            Tables.embeddings(spark, sfDir), "embedding", "vec_id"),
+          k = LearnedK, iters = LearnedIters)
+      }.select($"cluster_id".as("cid"), $"cv")
     }
 
   /** Staged cell assignment under the LEARNED centroids — the shipped
@@ -1836,19 +1815,12 @@ object Similarity {
     val root = graft.core.Scratch.dir("semantic-cells", sfDir)
     graft.operators.Staging.memoized(spark, sfDir, "semantic-cell-index-built") {
       // committed-state fast path with corpus-signature staleness
-      // detection (the learnedCentroids / Dedup.maintainedIndexRoot
-      // discipline); sig written LAST so a mid-build crash rebuilds
-      val sig = Tables.embeddings(spark, sfDir)
-        .agg(expr(CorpusSigSpark)).head().getLong(0)
-      val sigFile = root.resolve("_GRAFT_SIG")
-      val current =
-        SemanticIndex.isCommitted(root) &&
-        SemanticIndex.committedDeltaCount(root) == 2 &&
-        SemanticIndex.hasModel(root) &&
-        java.nio.file.Files.exists(sigFile) &&
-        java.nio.file.Files.readString(sigFile).trim == sig.toString
-      if (!current) {
-        java.nio.file.Files.deleteIfExists(sigFile)
+      // detection (the Dedup.maintainedIndexRoot discipline); a base
+      // published before the model slot existed rebuilds too
+      val sig = graft.core.CommittedStore.signature(
+        Tables.embeddings(spark, sfDir), CorpusSigSpark)
+      graft.core.CommittedStore.gatedBuild(root, sig, deltas = 2,
+          layoutCurrent = SemanticIndex.hasModel(root)) {
         val cc = corpusCells(spark, sfDir)
         // the centroid MODEL publishes with the base (r17): the store
         // carries the artifact its assignments were made under, so the
@@ -1872,7 +1844,6 @@ object Similarity {
           .filter($"vec_id" % DeleteMod === DeleteRem).select($"vec_id")
         SemanticIndex.applyMaintenance(spark, root,
           spark.emptyDataset[(Long, Long)].toDF("vec_id", "cell"), tombs)
-        java.nio.file.Files.writeString(sigFile, sig.toString)
       }
       Seq(root.toString).toDF("root")
     }.count()

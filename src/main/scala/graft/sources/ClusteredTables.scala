@@ -161,7 +161,7 @@ object ClusteredTables {
     * had a crash window where a `_SUCCESS`-complete mirror existed with
     * no manifest (review r8; safe but pruning-less). Underscore prefix
     * keeps it invisible to the parquet reader. */
-  private val CommittedMarker = "_GRAFT_COMMITTED"
+  private val CommittedMarker = graft.core.CommittedStore.MarkerFile
 
   private def build(spark: SparkSession, sfDir: String, name: String,
       layout: String, writeOptions: Map[String, String] = Map.empty,

@@ -2046,7 +2046,7 @@ object EventStream {
 
   /** foreachBatch sink folding a stream of postings decisions into the
     * committed postings index at `root` (exactly-once via the epoch
-    * tag; epochs survive compaction by the StoreLayout carry). */
+    * tag; epochs survive compaction by the CommittedStore carry). */
   def postingsIndexSink(decisions: Dataset[PostingsMaintenance],
       root: java.nio.file.Path)
       : org.apache.spark.sql.streaming.DataStreamWriter[PostingsMaintenance] =

@@ -1317,6 +1317,58 @@ class LlmOpsSpec extends SparkTestBase {
     assert(sig2 == expected, s"rebuilt sig $sig2 != corpus sig $expected")
   }
 
+  /** A private corpus dir holding one table file copied from the
+    * fixture — the sidecar tests below corrupt sidecars keyed by this
+    * dir only. */
+  private def privateCorpus(table: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"sidecar-$table")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, s"$table.parquet"),
+      dir.resolve(s"$table.parquet"))
+    dir.toString
+  }
+
+  /** Externally truncate a committed sidecar: swap its data files for a
+    * ZERO-ROW file of the same schema while the commit marker stays. */
+  private def truncateKeepingMarker(path: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val marker = graft.core.CommittedStore.MarkerFile
+    val schema = spark.read.parquet(path.toString).schema
+    val tmp = java.nio.file.Files.createTempDirectory("sidecar-empty")
+    spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      .coalesce(1).write.parquet(tmp.resolve("d").toString)
+    java.nio.file.Files.list(path).iterator().asScala.toList
+      .filter(_.getFileName.toString != marker)
+      .foreach(graft.core.CommitProtocol.deleteRecursively)
+    java.nio.file.Files.list(tmp.resolve("d")).iterator().asScala.toList
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(p => java.nio.file.Files.copy(p, path.resolve(p.getFileName)))
+    graft.core.CommitProtocol.deleteRecursively(tmp)
+    assert(java.nio.file.Files.exists(path.resolve(marker)))
+    assert(spark.read.parquet(path.toString).count() == 0)
+  }
+
+  test("a marked-but-empty centroid sidecar reads as stale and is rebuilt") {
+    val dir = privateCorpus("embeddings")
+    val expected = Similarity.learnedCentroids(spark, dir).collect().toSet
+    assert(expected.nonEmpty)
+    truncateKeepingMarker(Similarity.learnedCentroidsPath(dir))
+    // the memoized frame must not mask the on-disk corruption
+    graft.operators.Staging.invalidate(Some(dir))
+    assert(Similarity.learnedCentroids(spark, dir).collect().toSet == expected,
+      "empty sidecar must be rebuilt to the fitted model, not hard-fail")
+  }
+
+  test("a marked-but-empty journey sidecar reads as stale and is rebuilt") {
+    val dir = privateCorpus("events")
+    val expected = Events.committedJourneyEdges(spark, dir).collect().toSet
+    assert(expected.nonEmpty)
+    truncateKeepingMarker(Events.journeyModelPath(dir))
+    graft.operators.Staging.invalidate(Some(dir))
+    assert(Events.committedJourneyEdges(spark, dir).collect().toSet == expected,
+      "empty sidecar must be rebuilt to the transition matrix, not hard-fail")
+  }
+
   test("gram-coverage and source-novelty are bounded ratios with no all-pairs join") {
     import spark.implicits._
     val cov = Dedup.qGramCoverage(spark, sfDir)
