@@ -22,9 +22,10 @@ import org.apache.spark.sql.types.StructType
   * commit markers and read exactly those batch directories.
   *
   * Scale: batches are append-only directories (`<table>/batch=<id>`) — no
-  * rewrite of existing data on ingest; constraint validation is a groupBy
-  * on the PK (shuffle of key column only) and can be disabled for trusted
-  * re-loads.
+  * rewrite of existing data on ingest. A batch commits in one Spark query
+  * per staged table (the writes run concurrently) plus one key-check
+  * query over every PK'd table; the check reads every committed key
+  * column, and can be disabled for trusted re-loads.
   */
 final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boolean = true) {
 
@@ -333,12 +334,16 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
     require(!committedBatchIds().contains(batchId), s"batch $batchId already committed")
     val staging = stagingDir(batchId)
     try {
-      tables.foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(staging.resolve(name).toString)
-      }
-      if (validatePks) tables.foreach { case (name, _) =>
-        pkColumns.get(name).foreach(pk =>
-          validatePk(name, pk, batchId, staging, crossBatchPkCheck))
+      // the staged writes are independent jobs: overlap them (Par.run
+      // waits for all of them before it rethrows, so the rollback below
+      // never deletes a directory a sibling write is still filling)
+      graft.operators.Par.run(tables.map { case (name, df) => () =>
+        withJobLabel(spark, s"etl $batchId: stage $name") {
+          df.write.mode("overwrite").parquet(staging.resolve(name).toString)
+        }
+      })
+      if (validatePks) withJobLabel(spark, s"etl $batchId: key check") {
+        validateStagedPks(tables.map(_._1), batchId, staging, crossBatchPkCheck)
       }
     } catch {
       // a stage/validate failure discards the staging area — nothing
@@ -359,54 +364,54 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
     }
   }
 
-  /** PK uniqueness, two cheap phases (round-1 version unioned staged with
-    * the ENTIRE committed table and re-grouped — an O(total²) shuffle over
-    * a P-page run):
-    *  1. within-batch dups: groupBy over the small staged page only;
-    *  2. staged-vs-committed: broadcast the staged PKs (a page is always
-    *     small) and left-semi join against the committed PK column — a
-    *     pruned single-column scan of committed data, NO shuffle of it.
-    * Per-page cost is one committed-PK-column scan; for bulk re-loads use
+  /** PK uniqueness of a staged batch, every PK'd table in ONE query (at
+    * page size each query's fixed driver overhead, not its data, is the
+    * cost of a check): the staged `(table, key)` rows, read back from
+    * the staged bytes, unioned — when the
+    * cross-batch check is on — with the committed `(table, key)` rows
+    * left-semi joined to the broadcast staged keys (a page is always
+    * small; the committed side is a pruned key-column scan, not
+    * shuffled whole), then [[firstDuplicate]]. A key seen twice is a
+    * within-batch or a staged-vs-committed duplicate. The cost per page
+    * is one scan of every committed key column: O(committed rows) a
+    * page, so a P-page run reads O(P²) keys — for bulk re-loads use
     * validatePks=false and one [[validateAllPks]] at the end (O(total)
-    * once instead of per page). */
-  private def validatePk(name: String, pk: String, batchId: String,
-      staging: Path, crossBatch: Boolean = true): Unit = {
-    val staged = spark.read.schema(tableSchemas(name)).parquet(staging.resolve(name).toString)
-    val withinDup = staged.select(pk)
-      .groupBy(col(pk)).count().filter(col("count") > 1).limit(1).collect()
-    if (withinDup.nonEmpty)
-      throw new IllegalStateException(
-        s"duplicate key value violates unique constraint: $name.$pk = ${withinDup.head.get(0)} (batch $batchId)")
-    if (!crossBatch) return
-    val crossDup = table(name).select(pk)
-      .join(broadcast(staged.select(pk)), Seq(pk), "left_semi")
-      .limit(1).collect()
-    if (crossDup.nonEmpty)
-      throw new IllegalStateException(
-        s"duplicate key value violates unique constraint: $name.$pk = ${crossDup.head.get(0)} (batch $batchId)")
+    * once). */
+  private def validateStagedPks(names: Seq[String], batchId: String, staging: Path,
+      crossBatch: Boolean): Unit = {
+    val pkd = names.filter(pkColumns.contains)
+    if (pkd.isEmpty) return
+    val staged = pkd.map { name =>
+      keyed(name, spark.read.schema(tableSchemas(name)).parquet(staging.resolve(name).toString))
+    }.reduce(_ union _)
+    val keys =
+      if (!crossBatch) staged
+      else staged.union(pkd.map(n => keyed(n, table(n))).reduce(_ union _)
+        .join(broadcast(staged), Seq("table", "key"), "left_semi"))
+    firstDuplicate(keys).foreach { case (name, key) =>
+      throw duplicateKey(name, key, s" (batch $batchId)")
+    }
   }
 
   /** One-shot global PK validation over everything committed — the
-    * companion to validatePks=false bulk loads: one shuffle keyed by PK
-    * per table, instead of a per-page scan. Rows landed via
-    * [[upsertBatch]] are excluded from the cross-batch uniqueness check:
-    * a correction legitimately shares its PK with the row it supersedes
-    * (its within-batch uniqueness was already enforced at commit), so
-    * only duplicates among APPEND batches are violations. */
-  def validateAllPks(): Unit =
-    pkColumns.foreach { case (name, pk) =>
-      taggedTable(name).foreach { t =>
-        val ups = upsertBatchIds()
-        val appends =
-          if (ups.isEmpty) t
-          else t.filter(!col("_batch").isInCollection(ups.toSeq))
-        val dup = appends.select(pk)
-          .groupBy(col(pk)).count().filter(col("count") > 1).limit(1).collect()
-        if (dup.nonEmpty)
-          throw new IllegalStateException(
-            s"duplicate key value violates unique constraint: $name.$pk = ${dup.head.get(0)}")
+    * companion to validatePks=false bulk loads: one shuffle keyed by
+    * (table, PK) over every PK'd table, instead of a per-page scan. Rows
+    * landed via [[upsertBatch]] are excluded from the cross-batch
+    * uniqueness check: a correction legitimately shares its PK with the
+    * row it supersedes (its within-batch uniqueness was already enforced
+    * at commit), so only duplicates among APPEND batches are violations. */
+  def validateAllPks(): Unit = {
+    val ups = upsertBatchIds()
+    val appends = pkColumns.keys.toSeq.sorted.flatMap { name =>
+      taggedTable(name).map { t =>
+        keyed(name, if (ups.isEmpty) t else t.filter(!col("_batch").isInCollection(ups.toSeq)))
       }
     }
+    if (appends.nonEmpty)
+      firstDuplicate(appends.reduce(_ union _)).foreach { case (name, key) =>
+        throw duplicateKey(name, key, "")
+      }
+  }
 
   private[graft] def committedBatches: Seq[String] = committedBatchIds()
 
@@ -572,10 +577,36 @@ object ShiftWarehouse {
     "award_interpretations" -> ShiftSchemas.awardsTable,
     "kpis" -> ShiftSchemas.kpisTable)
 
-  /** PKs per initdb.sql:4,12,22,31. */
+  /** PKs per initdb.sql:4,12,22,31 (all four StringType, so the key
+    * columns of different tables union into one `key` column). */
   val pkColumns: Map[String, String] = Map(
     "shifts" -> "shift_id",
     "breaks" -> "break_id",
     "allowances" -> "allowance_id",
     "award_interpretations" -> "award_id")
+
+  /** A PK'd table's rows as `(table, key)`. */
+  private def keyed(name: String, rows: DataFrame): DataFrame =
+    rows.select(lit(name).as("table"), col(pkColumns(name)).as("key"))
+
+  /** The first `(table, key)` that occurs more than once in `keys`, if
+    * any — the one duplicate finder behind every PK check. */
+  private def firstDuplicate(keys: DataFrame): Option[(String, Any)] =
+    keys.groupBy("table", "key").count().filter(col("count") > 1)
+      .limit(1).collect().headOption.map(r => (r.getString(0), r.get(1)))
+
+  private def duplicateKey(name: String, key: Any, suffix: String): IllegalStateException =
+    new IllegalStateException(
+      s"duplicate key value violates unique constraint: $name.${pkColumns(name)} = $key$suffix")
+
+  /** Run `body` with `label` as the calling thread's Spark job
+    * description, restoring the previous description afterwards. A label
+    * set inside another one is appended to it (`outer / inner`), so a
+    * step's jobs keep naming the step that encloses them. */
+  private[etl] def withJobLabel[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(if (prev == null) label else s"$prev / $label")
+    try body finally sc.setJobDescription(prev)
+  }
 }

@@ -49,13 +49,16 @@ object ShiftsEtl {
       s"runId '$runId' already has committed batches; choose a fresh runId")
     pages.grouped(pagesPerBatch).zipWithIndex.foreach { case (grp, i) =>
       // cache the raw page: all four normalized tables derive from it, and
-      // without the cache each table write re-parses the page (4 jobs/page)
+      // without the cache each of the four concurrent staged writes would
+      // re-parse the page
       val batch = grp.reduce(_ union _).persist()
       try warehouse.appendBatch(ShiftNormalizer.normalize(batch), f"$runId-p$i%05d")
       finally batch.unpersist()
     }
     val kpis = ShiftKpis.all(warehouse.normalized, asOfDate)
-    warehouse.appendKpis(kpis, s"$runId-kpis")
+    ShiftWarehouse.withJobLabel(kpis.sparkSession, s"etl $runId: kpis") {
+      warehouse.appendKpis(kpis, s"$runId-kpis")
+    }
     warehouse.kpis
   }
 

@@ -1,6 +1,13 @@
 package graft.etl
 
+import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkTestBase
 
@@ -270,6 +277,118 @@ class ShiftWarehouseSpec extends SparkTestBase {
     wh.clear()
     assert(wh.shifts.count() === 0)
     assert(wh.kpis.count() === 0)
+  }
+
+  /** singlePage with the given ids renamed, so it can commit next to a
+    * batch holding the original page. */
+  private def renaming(ids: Seq[String]): DataFrame =
+    PageSource.parsePage(spark, ids.foldLeft(ShiftFixtures.singlePage)((j, id) => j.replace(id, s"$id-2")))
+
+  private def keys(df: DataFrame, pk: String): Seq[String] =
+    df.select(pk).collect().map(_.getString(0)).toSeq
+
+  test("a failed concurrent staged write rolls the whole batch back") {
+    val root = tempDir("wh-stage-fail")
+    val wh = new ShiftWarehouse(spark, root)
+    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
+    val n = ShiftNormalizer.normalize(page)
+    val failing = n.copy(awardInterpretations = n.awardInterpretations.withColumn("award_units",
+      when(col("award_id").isNotNull, raise_error(lit("staged write failed")))
+        .otherwise(col("award_units"))))
+    val e = intercept[Exception](wh.appendBatch(failing, "b0"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("staged write failed")), e)
+    assert(wh.shifts.count() === 0)
+    assert(wh.breaks.count() === 0)
+    assert(wh.allowances.count() === 0)
+    assert(wh.awardInterpretations.count() === 0)
+    assert(!Files.exists(Paths.get(root, "_staging", "b0")), "staging residue left behind")
+  }
+
+  test("the key check names the table of a within-batch duplicate") {
+    val wh = new ShiftWarehouse(spark, tempDir("wh-dup-breaks"))
+    val page = PageSource.parsePage(spark, ShiftFixtures.dupPkPage)
+    val e = intercept[IllegalStateException](wh.appendBatch(ShiftNormalizer.normalize(page), "b0"))
+    assert(e.getMessage === "duplicate key value violates unique constraint: " +
+      "breaks.break_id = 16419f82-8b9d-4434-a465-e150bd9c66b3 (batch b0)")
+  }
+
+  test("the key check names the table of a cross-batch duplicate") {
+    val wh = new ShiftWarehouse(spark, tempDir("wh-dup-awards"))
+    wh.appendBatch(ShiftNormalizer.normalize(PageSource.parsePage(spark, ShiftFixtures.singlePage)), "b0")
+    // fresh shift, break and allowance ids; the award ids are reused
+    val fresh = ShiftWarehouse.pkColumns.toSeq.filter(_._1 != "award_interpretations")
+      .flatMap { case (t, pk) => keys(wh.table(t), pk) }
+    val e = intercept[IllegalStateException](
+      wh.appendBatch(ShiftNormalizer.normalize(renaming(fresh)), "b1"))
+    val expected = keys(wh.awardInterpretations, "award_id").map(id =>
+      s"duplicate key value violates unique constraint: award_interpretations.award_id = $id (batch b1)")
+    assert(expected.contains(e.getMessage), e.getMessage)
+    assert(wh.committedBatches === Seq("b0"))
+  }
+
+  /** Waits until `seen` holds, failing after 30 s. */
+  private def await(seen: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (!seen && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(seen, "listener event never arrived")
+  }
+
+  test("a batch commits in one query per staged table plus one key check") {
+    val wh = new ShiftWarehouse(spark, tempDir("wh-queries"))
+    wh.appendBatch(ShiftNormalizer.normalize(PageSource.parsePage(spark, ShiftFixtures.singlePage)), "b0")
+    val page = renaming(ShiftWarehouse.pkColumns.toSeq.flatMap { case (t, pk) => keys(wh.table(t), pk) })
+    val batch = ShiftNormalizer.normalize(page)
+    // listener events arrive asynchronously and in order: a sentinel query
+    // before and after the commit brackets exactly the commit's executions
+    val succeeded = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        succeeded.add(qe.analyzed.output.map(_.name).find(_.startsWith("sentinel_")).getOrElse(funcName))
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      spark.range(1).toDF("sentinel_before").collect()
+      await(succeeded.contains("sentinel_before"))
+      wh.appendBatch(batch, "b1")
+      spark.range(1).toDF("sentinel_after").collect()
+      await(succeeded.contains("sentinel_after"))
+    } finally spark.listenerManager.unregister(listener)
+    val all = succeeded.toArray.toSeq
+    val commit = all.slice(all.indexOf("sentinel_before") + 1, all.indexOf("sentinel_after"))
+    assert(commit.size >= 4, s"the four staged writes are missing: $commit")
+    assert(commit.size <= 5, s"${commit.size} SQL executions for one batch: $commit")
+    assert(wh.shifts.count() === 4)
+  }
+
+  test("every job of a batch commit carries the batch's label, pool threads included") {
+    val wh = new ShiftWarehouse(spark, tempDir("wh-labels"))
+    val batch = ShiftNormalizer.normalize(PageSource.parsePage(spark, ShiftFixtures.singlePage))
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        labels.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("<none>"))
+    }
+    val sc = spark.sparkContext
+    def sentinel(label: String): Unit = {
+      sc.setJobDescription(label)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      await(labels.contains(label))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("sentinel before")
+      wh.appendBatch(batch, "b0")
+      sentinel("sentinel after")
+    } finally sc.removeSparkListener(listener)
+    val all = labels.toArray.toSeq.map(_.toString)
+    val commit = all.slice(all.indexOf("sentinel before") + 1, all.indexOf("sentinel after"))
+    assert(commit.nonEmpty)
+    assert(commit.forall(_.startsWith("etl b0: ")), commit)
+    assert(commit.toSet ===
+      (ShiftWarehouse.pkColumns.keySet.map(t => s"etl b0: stage $t") + "etl b0: key check"))
   }
 }
 
